@@ -1,4 +1,4 @@
-"""Repository benchmark: three workloads timed from outside the engine.
+"""Repository benchmark: two workloads measured from outside the engine.
 
 Run ``python3 perfbench/run.py --help``; see README.md in this directory.
 """

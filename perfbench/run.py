@@ -1,28 +1,30 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload pin_batch --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload pin_batch --seed 1 --seconds 12 --trace 0
 
-One run, in one process on ``local[nproc]``:
+One run, in one process on ``local[nproc / 2]``, with the JVM's JIT
+limited to C1:
 
-1. set up three times (session start, fixtures, seeded inputs) and report
+1. set up ``SETUPS`` times (session start, fixtures, seeded inputs) and report
    the median as ``setup_s``;
 2. compute the reference answers (DuckDB oracles), untimed;
-3. run the cold pass in the last, fresh session (``cold_pass_s``); it is
-   also the warm-up;
-4. force a GC and pause, so queued JIT compilations finish outside the
-   timers;
-5. run measured passes for ``--seconds`` seconds (at least one);
+3. run the cold pass in the last, fresh session; it is the warm-up;
+4. force a full GC;
+5. run measured passes for ``--seconds`` seconds (at least
+   ``MIN_MEASURED``), reading the CPU time of every engine thread
+   before and after each;
 6. run the checks that need Spark after the passes (streaming's batch
    reference), untimed.
 
-With ``--trace 0`` the last stdout line carries the end-to-end metrics;
-with ``--trace 1`` half the measured passes are traced (job groups per
+With ``--trace 0`` the last stdout line carries the end-to-end metrics:
+CPU seconds per pass, which a busy host moves far less than walls. With
+``--trace 1`` half the measured passes are traced (job groups per
 build/run span, status-store attribution, streaming progress) and the
-line carries the per-layer metrics plus the tracing overhead. Every
-operation's output is checked; a mismatch makes ``correct`` false and
-the exit code 1. A full record of the run is written under
-``.perfbench/results/`` in the checkout.
+line carries the per-layer metrics, the wall-clock figures and the
+tracing overhead. Every operation's output is checked; a mismatch makes
+``correct`` false and the exit code 1. A full record of the run is
+written under ``.perfbench/results/`` in the checkout.
 """
 
 from __future__ import annotations
@@ -46,8 +48,11 @@ ROOT = os.path.dirname(HERE)
 ENGINE = "pinterest_data_pipeline400_spark"
 
 SETUPS = 3
-MIN_MEASURED = 1
-QUIESCE_S = 3
+MIN_MEASURED = 2
+#: C1 only: whole-stage codegen compiles new classes in every pass, and
+#: C2 recompiling them takes more CPU than the program itself and keeps
+#: the pass CPU drifting for the whole run; see README.md
+JVM_OPTS = "-XX:TieredStopAtLevel=1"
 PLAN_MODULES = ["pinterest_queries"]
 STREAM_PARTS = [("add_batch_ms", "addBatch"), ("query_planning_ms", "queryPlanning"),
                 ("wal_commit_ms", "walCommit"), ("commit_offsets_ms", "commitOffsets"),
@@ -89,7 +94,7 @@ class Runner:
     def __init__(self, args, work: str):
         self.args = args
         self.work = work
-        self.cpus = len(os.sched_getaffinity(0))
+        self.cpus = task_threads()
         self.spark = None
         self.setups: list[dict] = []
         self.passes: list[dict] = []
@@ -108,7 +113,7 @@ class Runner:
             extra_conf={
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
                 "spark.driver.extraJavaOptions":
-                    f"-Dderby.system.home={self.work}/derby -Djava.io.tmpdir={self.work}/tmp",
+                    f"-Dderby.system.home={self.work}/derby -Djava.io.tmpdir={self.work}/tmp {JVM_OPTS}",
                 "spark.ui.showConsoleProgress": "false",
             },
         )
@@ -140,15 +145,15 @@ class Runner:
         self.prepare_s = time.perf_counter() - t0
 
         self.run_pass("cold", traced=False)
-        # quiesce: let queued JIT compilations and a full GC finish before
-        # the measured passes, so they do not land inside one of them
+        # a full GC now, so that the cold pass's garbage is not collected
+        # inside a measured pass
         self.spark.sparkContext._jvm.System.gc()
-        time.sleep(QUIESCE_S)
         t0 = time.perf_counter()
         n = 0
-        least = 2 if self.args.trace else MIN_MEASURED  # traced and untraced
+        # with --trace 1, every second pass is traced, from the second on
+        least = MIN_MEASURED + 1 if self.args.trace else MIN_MEASURED
         while n < least or time.perf_counter() - t0 < self.args.seconds:
-            self.run_pass("measured", traced=bool(self.args.trace) and n % 2 == 0)
+            self.run_pass("measured", traced=bool(self.args.trace) and n % 2 == 1)
             n += 1
         self.measure_s = time.perf_counter() - t0
         t0 = time.perf_counter()
@@ -172,6 +177,8 @@ class Runner:
         tracer.on, tracer.pass_id = traced, idx
         span_mark = len(tracer.spans)
         results = []
+        jvm0, py0 = self.engine_threads(), sparkstats.thread_cpu_s(os.getpid())
+        classes0 = sparkstats.codegen_classes(self.spark)
         t_pass = time.perf_counter()
         for op in ops:
             t0 = time.perf_counter()
@@ -182,6 +189,10 @@ class Runner:
                 out, err = None, f"{type(exc).__name__}: {exc}".splitlines()[0][:300]
             results.append((op, out, err, t0, time.perf_counter()))
         wall = time.perf_counter() - t_pass
+        cpu = sparkstats.cpu_between(jvm0, self.engine_threads())
+        py = sparkstats.cpu_between(py0, sparkstats.thread_cpu_s(os.getpid()))
+        cpu.update(python=py["work"], wait=cpu["wait"] + py["wait"])
+        classes = sparkstats.codegen_classes(self.spark) - classes0
         tracer.on = False
         if traced:
             sc.setJobGroup("perfbench|checks", "perfbench|checks")
@@ -221,10 +232,24 @@ class Runner:
             s.update(sparkstats.stage_totals(stages, [i for j in in_span for i in j["stageIds"]]))
         totals = sparkstats.stage_totals(stages, [i for j in jobs for i in j["stageIds"]])
         self.passes.append({
-            "index": idx, "kind": kind, "traced": traced, "wall": wall, "ops": rec_ops,
+            "index": idx, "kind": kind, "traced": traced, "wall": wall, "cpu": cpu,
+            "codegen_classes": classes, "ops": rec_ops,
             "spark.jobs": len(jobs), "job_walls_ms": sparkstats.job_walls_ms(jobs),
             "spans": spans, **{f"spark.{k}": v for k, v in totals.items()},
         })
+
+    def engine_threads(self) -> dict:
+        """``thread_cpu_s`` of the JVM and of the Python workers it
+        forks (pandas UDFs and stateful operators run there)."""
+        from perfbench import sparkstats
+
+        out = {}
+        for pid in [self.reader.jvm_pid, *sparkstats.descendants(self.reader.jvm_pid)]:
+            try:
+                out.update(sparkstats.thread_cpu_s(pid))
+            except OSError:  # the worker ended
+                pass
+        return out
 
     # -- metrics ------------------------------------------------------
     def measured(self, traced: bool | None = None) -> list[dict]:
@@ -232,17 +257,25 @@ class Runner:
                 and (traced is None or p["traced"] == traced)]
 
     def end_to_end(self) -> tuple[dict, dict]:
-        m = self.measured(traced=False) or self.measured()
+        m = self.measured(traced=False)
         values = {
             "setup_s": (median([s["total_s"] for s in self.setups]), "s"),
-            "cold_pass_s": (self.passes[0]["wall"], "s"),
-            "pass_s": (median([p["wall"] for p in m]), "s"),
-            "headline_s": (median([sum(o["wall"] for o in p["ops"] if o["headline"]) for p in m]), "s"),
-            "rows_per_s": (median([sum(o.get("rows", 0) for o in p["ops"]) / p["wall"] for p in m]), "1/s"),
+            "pass_cpu_s": (median([p["cpu"]["work"] + p["cpu"]["python"] for p in m]), "s"),
+            "executor_cpu_s": (median([p["spark.executor_cpu_s"] for p in m]), "s"),
             "ok_rate": (1 - len(self.failures) / max(1, self.attempted), "ratio"),
         }
-        samples = {"setup_s": len(self.setups), "pass_s": len(m), "headline_s": len(m)}
-        return values, samples
+        return values, {"setup_s": len(self.setups), "passes": len(m)}
+
+    def walls(self) -> dict:
+        """Wall-clock figures of the untraced measured passes, from each
+        operation's median wall."""
+        ops = op_medians(self.measured(traced=False))
+        pass_s = sum(o["wall"] for o in ops.values())
+        return {
+            "wall.pass_s": (pass_s, "s"),
+            "wall.headline_s": (sum(o["wall"] for o in ops.values() if o["headline"]), "s"),
+            "wall.rows_per_s": (sum(o["rows"] for o in ops.values()) / pass_s, "1/s"),
+        }
 
     def per_layer(self) -> tuple[dict, dict]:
         traced = self.measured(traced=True)
@@ -258,9 +291,11 @@ class Runner:
             "generator.build_s": (median([s["generator.build_s"] for s in self.setups]), "s"),
             "proc.peak_rss_mb": (self.rss_mb, "MB"),
             "pinterest.cleaned_tables_s": (cold.get("pinterest.cleaned_tables", 0.0), "s"),
+            "session.cold_pass_s": (self.passes[0]["wall"], "s"),
             "trace.pass_s": (t_on, "s"),
             "trace.untraced_pass_s": (t_off, "s"),
             "trace.overhead_pct": (100 * (t_on - t_off) / t_off if t_off else 0.0, "%"),
+            **self.walls(),
         })
         return values, {"traced_passes": len(traced), "untraced_passes": len(untraced)}
 
@@ -278,6 +313,11 @@ class Runner:
             "clean.pin_build_s": (span_s(lambda s: s["op"] == "clean.pin" and s["phase"] == "build"), "s"),
             "pinterest.pq_s": (sum(o["wall"] for o in p["ops"] if o["name"].startswith("pq")), "s"),
             "plans.uncovered_s": (p["wall"] - span_s(lambda s: True), "s"),
+            "jvm.jit_cpu_s": (p["cpu"]["jit"], "s"),
+            "jvm.gc_cpu_s": (p["cpu"]["gc"], "s"),
+            "python.cpu_s": (p["cpu"]["python"], "s"),
+            "proc.runqueue_wait_s": (p["cpu"]["wait"], "s"),
+            "spark.codegen_classes": (p["codegen_classes"], "count"),
         }
         for t in ("pin", "geo", "user"):
             o = ops.get(f"clean.{t}") or ops.get(f"drain.{t}")
@@ -324,9 +364,28 @@ class Runner:
         return out
 
 
+def op_medians(passes: list[dict]) -> dict[str, dict]:
+    """Per operation over ``passes``: its median wall and median rows."""
+    ops: dict[str, list[dict]] = {}
+    for p in passes:
+        for o in p["ops"]:
+            ops.setdefault(o["name"], []).append(o)
+    return {name: {"wall": median([o["wall"] for o in calls]),
+                   "rows": median([o.get("rows", 0) for o in calls]),
+                   "headline": calls[0]["headline"]}
+            for name, calls in ops.items()}
+
+
+def task_threads() -> int:
+    """Spark task threads: half the cores, so the JIT compiler, the GC,
+    the Python driver and other tenants of a shared host do not preempt
+    tasks (every stage waits for its slowest task)."""
+    return max(1, len(os.sched_getaffinity(0)) // 2)
+
+
 # -- isolation, host context, teardown ---------------------------------
 
-def isolate(work: str) -> None:
+def isolate(work: str, threads: int) -> None:
     """Give this run its own scratch, local, temp and warehouse dirs (so
     disk caches of earlier runs cannot warm it), and size the heap from
     the host's memory instead of the engine's 16g default."""
@@ -337,8 +396,8 @@ def isolate(work: str) -> None:
         "SPARK_GRAFT_SCRATCH": os.path.join(work, "scratch"),
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "TMPDIR": os.path.join(work, "tmp"),
-        "SPARK_GRAFT_DRIVER_MEM": f"{min(4096, mem_mb // 4)}m",
-        "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+        "SPARK_GRAFT_DRIVER_MEM": f"{min(2048, mem_mb // 4)}m",
+        "SPARK_GRAFT_CPUS": str(threads),
         "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
     })
 
@@ -444,8 +503,9 @@ def main(argv=None) -> int:
     run_id = f"{args.workload}-seed{args.seed}-trace{args.trace}-{os.getpid()}"
     work = os.path.join(ROOT, ".perfbench", "work", run_id)
     shutil.rmtree(work, ignore_errors=True)
-    isolate(work)
-    host = {"nproc": len(os.sched_getaffinity(0)), "mem_total_mb": host_mem_mb(),
+    isolate(work, task_threads())
+    host = {"nproc": len(os.sched_getaffinity(0)), "task_threads": task_threads(),
+            "mem_total_mb": host_mem_mb(),
             "loadavg_start": os.getloadavg(), "python": platform.python_version(),
             "cpu_ticks_start": cpu_ticks(),
             "git_commit": git_commit(), "source_sha256": source_digest()}
@@ -482,6 +542,7 @@ def main(argv=None) -> int:
         "measure_s": runner.measure_s, "final_check_s": runner.final_check_s,
         "teardown_s": teardown_s, "setups": runner.setups,
         "end_to_end": {k: v for k, (v, _) in e2e.items()}, "samples": {**e2e_n, **layer_n},
+        "wall": {k: v for k, (v, _) in runner.walls().items()},
         "per_layer": {k: v for k, (v, _) in layers.items()},
         "failures": runner.failures, "passes": runner.passes,
     }

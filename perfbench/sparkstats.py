@@ -27,6 +27,13 @@ STAGE_SUMS = [
 ]
 
 
+def codegen_classes(spark) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    codegen = getattr(getattr(metrics, "CodegenMetrics$"), "MODULE$")
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 class StatusReader:
     """Job and stage records of one SparkContext, as plain dicts."""
 
@@ -99,6 +106,44 @@ def peak_rss_mb(pid: int) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     return 0.0
+
+
+#: JVM thread-name prefixes, by what the thread does
+THREAD_KINDS = [("jit", ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")),
+                ("gc", ("GC Thread", "G1 ", "VM Thread"))]
+
+
+def thread_cpu_s(pid: int) -> dict[str, tuple[str, float, float]]:
+    """Per live thread of a process, by thread id: its kind (``jit`` for
+    compiler threads, ``gc`` for collector and safepoint threads, ``work``
+    for the rest), the CPU seconds it has run, and the seconds it has
+    waited, runnable, for a CPU. Both come from the scheduler's
+    nanosecond clock, which leaves out time the hypervisor gave to
+    other guests."""
+    out = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+                name = fh.read().rstrip("\n")
+            with open(f"/proc/{pid}/task/{tid}/schedstat") as fh:
+                run_ns, wait_ns = fh.read().split()[:2]
+        except OSError:  # the thread ended
+            continue
+        kind = next((k for k, prefixes in THREAD_KINDS if name.startswith(prefixes)), "work")
+        out[tid] = (kind, int(run_ns) / 1e9, int(wait_ns) / 1e9)
+    return out
+
+
+def cpu_between(before: dict, after: dict) -> dict[str, float]:
+    """CPU seconds per thread kind, and runnable-wait seconds in total,
+    between two ``thread_cpu_s`` readings. A thread that ended in between
+    is lost: the JVM ends compiler and pool threads only once they idle."""
+    out = {"jit": 0.0, "gc": 0.0, "work": 0.0, "wait": 0.0}
+    for tid, (kind, cpu, wait) in after.items():
+        _, cpu0, wait0 = before.get(tid, (kind, 0.0, 0.0))
+        out[kind] += cpu - cpu0
+        out["wait"] += wait - wait0
+    return out
 
 
 def descendants(pid: int) -> list[int]:
