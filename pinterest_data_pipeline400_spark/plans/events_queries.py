@@ -32,12 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sql_utils import floor_log2_case_sql as _floor_log2_case
-from ..session import (
-    SCRATCH_ROOT,
-    STREAM_DRAIN_TIMEOUT_SEC,
-    STREAM_STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-)
+from ..session import SCRATCH_ROOT
+from ..sources.sinks import write_stream_foreach_batch
+from ..streaming import drain, stream_workdirs, write_stream_append
 from .registry import REGISTRY
 
 SESSION_GAP_SEC = 1800  # 30 minutes
@@ -135,33 +132,16 @@ def _prune_stale_siblings(base: str) -> None:
     prune_stale_siblings(prefix + "_*", keep=base)
 
 
-def _stream_workdirs(name: str, sf_dir: str) -> tuple[str, str, str]:
-    """(in_dir, sink, ckpt) for one streaming entry run — wiped fresh,
-    under the shared SCRATCH_ROOT. ONE implementation of the reset the
-    five streaming entries previously each copy-pasted (round 2 lost a
-    whole bench to a drain-semantics bug; shared scaffolding means the
-    next such fix lands once)."""
-    base = os.path.join(
-        SCRATCH_ROOT,
-        "stream",
-        f"{name}_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    dirs = tuple(os.path.join(base, d) for d in ("in", "sink", "ckpt"))
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
-    return dirs
-
-
-def _drain(query, name: str) -> None:
-    """availableNow drain with the timeout/stop contract every entry
-    shares: raise on a hang, never leave a query running."""
-    try:
-        if not query.awaitTermination(STREAM_DRAIN_TIMEOUT_SEC):
-            raise TimeoutError(f"{name} did not drain")
-    finally:
-        if query.isActive:
-            query.stop()
+def _replayed_events(
+    spark: SparkSession, name: str, sf_dir: str
+) -> tuple[DataFrame, str, str]:
+    """(stream, sink, ckpt): the events table copied into a fresh
+    scratch input dir and opened as a file stream, for one run of a
+    streaming entry."""
+    in_dir, sink, ckpt = stream_workdirs(name, sf_dir)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), in_dir)
+    stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
+    return stream, sink, ckpt
 
 
 @REGISTRY.register(
@@ -445,35 +425,22 @@ def ev_pivot_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sessions whose end the final watermark passed.",
 )
 def ev_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_sessions", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        agg = (
-            stream.withWatermark("ts", STREAM_WM_DELAY)
-            .groupBy(
-                F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"),
-                "user_id",
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-            )
+    stream, sink, ckpt = _replayed_events(spark, "ev_sessions", sf_dir)
+    agg = (
+        stream.withWatermark("ts", STREAM_WM_DELAY)
+        .groupBy(
+            F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"),
+            "user_id",
         )
-        query = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
         )
-        _drain(query, "ev_stream_sessions")
+    )
+    drain(spark, "ev_stream_sessions", lambda: write_stream_append(agg, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -523,54 +490,41 @@ def ev_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle runs it literally.",
 )
 def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_ssjoin", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", STREAM_WM_DELAY)
+    stream, sink, ckpt = _replayed_events(spark, "ev_ssjoin", sf_dir)
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
         )
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", STREAM_WM_DELAY)
+        .withWatermark("p_ts", STREAM_WM_DELAY)
+    )
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
         )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                f"""p_user = c_user
-                AND c_ts >= p_ts - INTERVAL {RANGE_WINDOW_SEC} SECONDS
-                AND c_ts < p_ts"""
-            ),
-        ).select(
-            "purchase_id",
-            "click_id",
-            F.col("p_user").alias("user_id"),
-            (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts"))
-            .cast("long")
-            .alias("gap_sec"),
-        )
-        query = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(query, "ev_stream_stream_join")
+        .withWatermark("c_ts", STREAM_WM_DELAY)
+    )
+    joined = purchases.join(
+        clicks,
+        F.expr(
+            f"""p_user = c_user
+            AND c_ts >= p_ts - INTERVAL {RANGE_WINDOW_SEC} SECONDS
+            AND c_ts < p_ts"""
+        ),
+    ).select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user").alias("user_id"),
+        (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts"))
+        .cast("long")
+        .alias("gap_sec"),
+    )
+    drain(spark, "ev_stream_stream_join", lambda: write_stream_append(joined, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -614,55 +568,42 @@ def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unbounded attribution join.",
 )
 def ev_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_ssljoin", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", STREAM_WM_DELAY)
+    stream, sink, ckpt = _replayed_events(spark, "ev_ssljoin", sf_dir)
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
         )
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", STREAM_WM_DELAY)
+        .withWatermark("p_ts", STREAM_WM_DELAY)
+    )
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
         )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                f"""p_user = c_user
-                AND c_ts >= p_ts - INTERVAL {RANGE_WINDOW_SEC} SECONDS
-                AND c_ts < p_ts"""
-            ),
-            "leftOuter",
-        ).select(
-            "purchase_id",
-            "click_id",
-            F.col("p_user").alias("user_id"),
-            (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts"))
-            .cast("long")
-            .alias("gap_sec"),
-        )
-        query = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(query, "ev_stream_stream_left_join")
+        .withWatermark("c_ts", STREAM_WM_DELAY)
+    )
+    joined = purchases.join(
+        clicks,
+        F.expr(
+            f"""p_user = c_user
+            AND c_ts >= p_ts - INTERVAL {RANGE_WINDOW_SEC} SECONDS
+            AND c_ts < p_ts"""
+        ),
+        "leftOuter",
+    ).select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user").alias("user_id"),
+        (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts"))
+        .cast("long")
+        .alias("gap_sec"),
+    )
+    drain(spark, "ev_stream_stream_left_join", lambda: write_stream_append(joined, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -721,30 +662,17 @@ def ev_salted_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per batch, picking up dim updates between batches.",
 )
 def ev_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_ssdim", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
     static_dim = (
         _events(spark, sf_dir)
         .select("event_type")
         .distinct()
         .withColumn("w", F.length("event_type").cast("long"))
     )
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        enriched = stream.join(F.broadcast(static_dim), on="event_type").select(
-            "event_id", "event_type", "w"
-        )
-        query = (
-            enriched.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(query, "ev_stream_static_join")
+    stream, sink, ckpt = _replayed_events(spark, "ev_ssdim", sf_dir)
+    enriched = stream.join(F.broadcast(static_dim), on="event_type").select(
+        "event_id", "event_type", "w"
+    )
+    drain(spark, "ev_stream_static_join", lambda: write_stream_append(enriched, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -970,27 +898,14 @@ def ev_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evicts closed windows.",
 )
 def ev_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_windowed", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        agg = (
-            stream.withWatermark("ts", STREAM_WM_DELAY)
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-        )
-        query = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(query, "ev_stream_windowed")
+    stream, sink, ckpt = _replayed_events(spark, "ev_windowed", sf_dir)
+    agg = (
+        stream.withWatermark("ts", STREAM_WM_DELAY)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
+    )
+    drain(spark, "ev_stream_windowed", lambda: write_stream_append(agg, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -1316,8 +1231,7 @@ def ev_theta_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate, which is the oracle.",
 )
 def ev_stream_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_upsert", sf_dir)
+    in_dir, sink, ckpt = stream_workdirs("ev_upsert", sf_dir)
     # split the input into 3 files → 3 micro-batches under
     # maxFilesPerTrigger=1: the upsert really runs multiple times
     ev = _events(spark, sf_dir)
@@ -1331,23 +1245,17 @@ def ev_stream_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        counts = stream.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events")
-        )
-        query = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(query, "ev_stream_upsert_counts")
+    stream = _with_event_ts(
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+    drain(
+        spark,
+        "ev_stream_upsert_counts",
+        lambda: write_stream_foreach_batch(counts, upsert, ckpt),
+    )
     return spark.read.parquet(sink).select("event_type", "n_events")
 
 
@@ -2888,38 +2796,25 @@ def ev_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "so the committed sink is value-checked, not just counted.",
 )
 def ev_stream_bitmap_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.path.join(sf_dir, "events.parquet")
-    in_dir, sink, ckpt = _stream_workdirs("ev_bitmap_hours", sf_dir)
-    shutil.copy(src, os.path.join(in_dir, "events.parquet"))
-
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        stream = _with_event_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
-        agg = (
-            stream.withWatermark("ts", STREAM_WM_DELAY)
-            .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-            .agg(
-                F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), hour(ts)))").alias(
-                    "hour_bitmap"
-                ),
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-            )
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
-                "user_id",
-                "hour_bitmap",
-                F.bit_count("hour_bitmap").cast("int").alias("n_active_hours"),
-                "n_events",
-            )
+    stream, sink, ckpt = _replayed_events(spark, "ev_bitmap_hours", sf_dir)
+    agg = (
+        stream.withWatermark("ts", STREAM_WM_DELAY)
+        .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
+        .agg(
+            F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), hour(ts)))").alias(
+                "hour_bitmap"
+            ),
+            F.count(F.lit(1)).cast("long").alias("n_events"),
         )
-        query = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
+            "user_id",
+            "hour_bitmap",
+            F.bit_count("hour_bitmap").cast("int").alias("n_active_hours"),
+            "n_events",
         )
-        _drain(query, "ev_stream_bitmap_hours")
+    )
+    drain(spark, "ev_stream_bitmap_hours", lambda: write_stream_append(agg, sink, ckpt))
     return spark.read.parquet(sink)
 
 

@@ -38,7 +38,15 @@ from ..sources.readers import (
     read_jdbc,
     read_json_topic,
 )
-from ..streaming import ENVELOPE, RAW_SCHEMAS, clean_stream, decode_stream
+from ..streaming import (
+    ENVELOPE,
+    RAW_SCHEMAS,
+    clean_stream,
+    decode_stream,
+    drain,
+    stream_workdirs,
+    write_stream_append,
+)
 from .pin_oracle import ORACLE_FX, _ctes
 from .registry import REGISTRY
 
@@ -169,45 +177,18 @@ def pyds_envelope_pin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over one checkpoint is pytest-proven separately.",
 )
 def pyds_stream_envelope_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from ..session import (
-        STREAM_DRAIN_TIMEOUT_SEC,
-        STREAM_STATE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
     from ..sources.envelope_datasource import register_envelope_source
 
     register_envelope_source(spark)
     topic_dir = os.path.join(fixture_dir_for(sf_dir), "stream", "user")
-    base = "/tmp/spark_graft_stream/pyds_user_" + os.path.basename(
-        os.path.normpath(sf_dir)
+    _, sink, ckpt = stream_workdirs("pyds_user", sf_dir)
+    raw = spark.readStream.format("kinesis_envelope").option("path", topic_dir).load()
+    cleaned = clean_stream(decode_stream(raw, RAW_SCHEMAS["user"]), "user")
+    drain(
+        spark,
+        "pyds_stream_envelope_user",
+        lambda: write_stream_append(cleaned, sink, ckpt),
     )
-    sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
-    for d in (sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        raw = (
-            spark.readStream.format("kinesis_envelope")
-            .option("path", topic_dir)
-            .load()
-        )
-        cleaned = clean_stream(decode_stream(raw, RAW_SCHEMAS["user"]), "user")
-        query = (
-            cleaned.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not query.awaitTermination(STREAM_DRAIN_TIMEOUT_SEC):
-                raise TimeoutError("pyds_stream_envelope_user did not drain")
-        finally:
-            if query.isActive:
-                query.stop()
     return spark.read.parquet(sink)
 
 

@@ -20,34 +20,26 @@ duplicate-free parquet table.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..generator import fixture_dir_for
-from ..session import (
-    STREAM_DRAIN_TIMEOUT_SEC,
-    STREAM_STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-)
+from ..sources.sinks import write_stream_foreach_batch
 from ..streaming import (
     RAW_SCHEMAS,
     ROCKSDB_PROVIDER,
     clean_stream,
     decode_stream,
     dedup_stream,
-    fresh_dirs,
+    drain,
     read_envelope_stream,
     stateful_running_counts,
+    stream_workdirs,
     write_stream_append,
 )
 from .pin_oracle import ORACLE_FX, _ctes
 from .registry import REGISTRY
-
-from ..session import SCRATCH_ROOT  # noqa: E402 — single scratch root
-
-_WORK_ROOT = os.path.join(SCRATCH_ROOT, "stream")
 
 
 def _run_entry(
@@ -56,22 +48,12 @@ def _run_entry(
     name: str,
     topic: str,
     build: "callable",
-    timeout_sec: int = STREAM_DRAIN_TIMEOUT_SEC,
 ) -> DataFrame:
     """Run one streaming pipeline to a fresh sink; return the sink df."""
-    fx = fixture_dir_for(sf_dir)
-    stream_dir = os.path.join(fx, "stream", topic)
-    base = os.path.join(_WORK_ROOT, f"{name}_{os.path.basename(fx)}")
-    sink, ckpt = fresh_dirs(base)  # the single T5 reset implementation
-    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        streamed = build(read_envelope_stream(spark, stream_dir))
-        query = write_stream_append(streamed, sink, ckpt)
-        try:
-            if not query.awaitTermination(timeout_sec):
-                raise TimeoutError(f"{name} did not drain in {timeout_sec}s")
-        finally:
-            if query.isActive:
-                query.stop()
+    stream_dir = os.path.join(fixture_dir_for(sf_dir), "stream", topic)
+    _, sink, ckpt = stream_workdirs(name, sf_dir)
+    streamed = build(read_envelope_stream(spark, stream_dir))
+    drain(spark, name, lambda: write_stream_append(streamed, sink, ckpt))
     return spark.read.parquet(sink)
 
 
@@ -239,13 +221,7 @@ def _run_two_phase_stateful(
     the state-recovery harness both stateful APIs are proven on."""
     import pandas as pd
 
-    base = os.path.join(
-        _WORK_ROOT, f"{name}_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    in_dir = os.path.join(base, "in")
-    shutil.rmtree(in_dir, ignore_errors=True)
-    os.makedirs(in_dir, exist_ok=True)
-    sink, ckpt = fresh_dirs(base)  # the single T5 reset implementation
+    in_dir, sink, ckpt = stream_workdirs(name, sf_dir)
 
     ev = pd.read_parquet(os.path.join(sf_dir, "events.parquet"))
     split = (ev.event_id.max() + 1) // 2
@@ -262,23 +238,8 @@ def _run_two_phase_stateful(
 
     def drain_phase(frame: "pd.DataFrame", fname: str) -> None:
         frame.to_parquet(os.path.join(in_dir, fname), index=False)
-        with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-            stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir)
-            counts = op(stream)
-            query = (
-                counts.writeStream.format("parquet")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .option("path", sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not query.awaitTermination(STREAM_DRAIN_TIMEOUT_SEC):
-                    raise TimeoutError(f"{name} did not drain")
-            finally:
-                if query.isActive:
-                    query.stop()
+        counts = op(spark.readStream.schema(EVENTS_SCHEMA).parquet(in_dir))
+        drain(spark, name, lambda: write_stream_append(counts, sink, ckpt))
 
     try:
         drain_phase(ev[ev.event_id < split], "part-0000.parquet")
@@ -403,13 +364,7 @@ def _run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import band_owner_stream, band_rows_stream
 
     name = "neardup_dedup"
-    base = os.path.join(
-        _WORK_ROOT, f"{name}_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    in_dir = os.path.join(base, "in")
-    shutil.rmtree(in_dir, ignore_errors=True)
-    os.makedirs(in_dir, exist_ok=True)
-    sink, ckpt = fresh_dirs(base)
+    in_dir, sink, ckpt = stream_workdirs(name, sf_dir)
 
     docs = pd.read_parquet(
         os.path.join(fixture_dir_for(sf_dir), "docs_dup.parquet")
@@ -426,24 +381,11 @@ def _run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def drain_phase(frame: "pd.DataFrame", fname: str) -> None:
         frame.to_parquet(os.path.join(in_dir, fname), index=False)
-        with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-            stream = spark.readStream.schema("doc_id long, text string").parquet(
-                in_dir
-            )
-            owned = band_owner_stream(band_rows_stream(stream))
-            query = (
-                owned.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not query.awaitTermination(STREAM_DRAIN_TIMEOUT_SEC):
-                    raise TimeoutError(f"{name} did not drain")
-            finally:
-                if query.isActive:
-                    query.stop()
+        stream = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
+        owned = band_owner_stream(band_rows_stream(stream))
+        drain(
+            spark, name, lambda: write_stream_foreach_batch(owned, write_batch, ckpt)
+        )
 
     drain_phase(docs[docs.doc_id < split], "part-0000.parquet")
     drain_phase(docs[docs.doc_id >= split], "part-0001.parquet")

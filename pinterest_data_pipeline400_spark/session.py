@@ -193,10 +193,9 @@ def prune_stale_siblings(pattern: str, keep: str) -> None:
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily set ``spark.sql.shuffle.partitions`` (restored on
     exit). Streaming queries pin their state-store partition count from
-    this conf at FIRST checkpoint creation — so wrap the
-    ``writeStream.start()`` (and everything up to ``awaitTermination``)
-    for queries with fresh checkpoints; batch plans built outside the
-    scope are unaffected."""
+    this conf at FIRST checkpoint creation — ``streaming.drain`` wraps
+    every streaming start in it; batch plans built outside the scope
+    are unaffected."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

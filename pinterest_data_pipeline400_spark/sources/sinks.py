@@ -61,7 +61,6 @@ def write_stream_foreach_batch(
     df: DataFrame,
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming sink escape hatch: ``foreachBatch`` hands each
     micro-batch to arbitrary BATCH writer code (idempotent upsert /
@@ -70,14 +69,17 @@ def write_stream_foreach_batch(
     contract: Spark guarantees ``batch_id`` is stable across retries,
     so ``batch_fn`` must be idempotent per (batch_id) — e.g. overwrite
     a batch_id-derived partition, or MERGE on a key — because a failed
-    micro-batch re-runs with the SAME id. Returns the started query."""
-    writer = (
+    micro-batch re-runs with the SAME id. Update mode: an aggregating
+    query hands over only the groups each batch changed (a stateless
+    query behaves as append). Drains with ``Trigger.AvailableNow``;
+    returns the started query."""
+    return (
         df.writeStream.foreachBatch(batch_fn)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def with_retries(

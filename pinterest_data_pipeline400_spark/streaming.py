@@ -24,19 +24,35 @@ Scale notes:
   * ``Trigger.AvailableNow`` drains everything pending then stops —
     deterministic for tests and the driver, micro-batched like
     production.
+
+Drain contract: every streaming query in the engine runs through
+:func:`drain` — started under ``STREAM_STATE_PARTITIONS`` shuffle
+partitions (the state-store partition count a fresh checkpoint pins),
+awaited for at most ``STREAM_DRAIN_TIMEOUT_SEC`` (``TimeoutError`` on a
+hang), always stopped if still active, and returned so the caller can
+read its ``recentProgress``. Sinks come from :func:`write_stream_append`
+or ``sources.sinks.write_stream_foreach_batch``; scratch dirs come from
+:func:`fresh_dirs` / :func:`stream_workdirs`, which share one wipe.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from .operators.clean import clean_geo, clean_pin, clean_user
-from .session import STREAM_DRAIN_TIMEOUT_SEC
+from .session import (
+    SCRATCH_ROOT,
+    STREAM_DRAIN_TIMEOUT_SEC,
+    STREAM_STATE_PARTITIONS,
+    scoped_shuffle_partitions,
+)
 from .schemas import GEO_RAW, PIN_RAW, USER_RAW
 
 #: Kinesis-envelope wire schema (stream_emul.py:116-133 analog).
@@ -107,25 +123,42 @@ def clean_stream(decoded: DataFrame, table: str) -> DataFrame:
     raise ValueError(f"unknown table {table!r}")
 
 
-def write_stream_append(
-    df: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    fmt: str = "parquet",
-    available_now: bool = True,
-):
+def write_stream_append(df: DataFrame, sink_dir: str, checkpoint_dir: str):
     """T4: append-mode sink with checkpointed exactly-once delivery
     (kinesis.py:232-236; parquet stands in for the Delta table — same
-    sink API, `.format("delta")` works unchanged where Delta ships)."""
-    writer = (
-        df.writeStream.format(fmt)
+    sink API, `.format("delta")` works unchanged where Delta ships).
+    Drains with ``Trigger.AvailableNow``; returns the started query."""
+    return (
+        df.writeStream.format("parquet")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .option("path", sink_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def drain(
+    spark: SparkSession,
+    name: str,
+    start: Callable[[], StreamingQuery],
+    timeout_sec: int | None = None,
+) -> StreamingQuery:
+    """The one drain path: call ``start`` under the streaming state
+    partition count, wait up to ``timeout_sec`` (default
+    ``STREAM_DRAIN_TIMEOUT_SEC``), raise ``TimeoutError`` on a hang, and
+    never leave the query running. Returns the stopped query, whose
+    ``recentProgress`` still holds the per-micro-batch reports."""
+    timeout = STREAM_DRAIN_TIMEOUT_SEC if timeout_sec is None else timeout_sec
+    with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        query = start()
+        try:
+            if not query.awaitTermination(timeout):
+                raise TimeoutError(f"{name} did not drain")
+        finally:
+            if query.isActive:
+                query.stop()
+    return query
 
 
 def run_pipeline_to_sink(
@@ -145,13 +178,12 @@ def run_pipeline_to_sink(
     `stream_dedup_watermarked` entry is that form, driver-checked)."""
     raw = read_envelope_stream(spark, stream_dir)
     cleaned = clean_stream(decode_stream(raw, RAW_SCHEMAS[table]), table)
-    query = write_stream_append(cleaned, sink_dir, checkpoint_dir)
-    try:
-        if not query.awaitTermination(timeout_sec):
-            raise TimeoutError(f"stream {table} did not drain in {timeout_sec}s")
-    finally:
-        if query.isActive:
-            query.stop()
+    drain(
+        spark,
+        f"stream {table}",
+        lambda: write_stream_append(cleaned, sink_dir, checkpoint_dir),
+        timeout_sec,
+    )
 
 
 def stateful_running_counts(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
@@ -243,15 +275,30 @@ def stateful_running_counts_tws(stream: DataFrame, key_col: str = "user_id") -> 
     )
 
 
-def fresh_dirs(base: str) -> tuple[str, str]:
-    """(sink, checkpoint) under ``base``, wiped — T5 checkpoint reset
-    (the reference's dbutils.fs.rm, kinesis.py:138)."""
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (sink, ckpt):
+def _wiped(base: str, *names: str) -> list[str]:
+    """``base/<name>`` for each name, deleted and recreated empty — the
+    T5 checkpoint reset (the reference's dbutils.fs.rm, kinesis.py:138)."""
+    dirs = [os.path.join(base, n) for n in names]
+    for d in dirs:
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d, exist_ok=True)
+    return dirs
+
+
+def fresh_dirs(base: str) -> tuple[str, str]:
+    """(sink, checkpoint) under ``base``, wiped."""
+    sink, ckpt = _wiped(base, "sink", "ckpt")
     return sink, ckpt
+
+
+def stream_workdirs(name: str, sf_dir: str) -> tuple[str, str, str]:
+    """(in_dir, sink, ckpt) for one run of a streaming registry entry,
+    wiped, under ``SCRATCH_ROOT/stream/<name>_<sf>``."""
+    base = os.path.join(
+        SCRATCH_ROOT, "stream", f"{name}_{os.path.basename(os.path.normpath(sf_dir))}"
+    )
+    in_dir, sink, ckpt = _wiped(base, "in", "sink", "ckpt")
+    return in_dir, sink, ckpt
 
 
 def band_rows_stream(docs: DataFrame) -> DataFrame:

@@ -21,7 +21,8 @@ from pinterest_data_pipeline400_spark.sources.sinks import (
     with_retries,
     write_table,
 )
-from pinterest_data_pipeline400_spark.streaming import ENVELOPE
+from pinterest_data_pipeline400_spark import streaming
+from pinterest_data_pipeline400_spark.streaming import ENVELOPE, write_stream_append
 from tests.conftest import TEST_SF_NAME
 
 
@@ -275,17 +276,10 @@ def test_envelope_datasource_streaming_exactly_once(spark, tmp_path):
                 }) + "\n")
 
     def drain() -> None:
-        q = (
-            spark.readStream.format("kinesis_envelope")
-            .option("path", str(topic))
-            .load()
-            .writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .trigger(availableNow=True)
-            .start()
+        raw = spark.readStream.format("kinesis_envelope").option("path", str(topic)).load()
+        streaming.drain(
+            spark, "custom-source stream", lambda: write_stream_append(raw, sink, ckpt)
         )
-        assert q.awaitTermination(60), "custom-source stream did not drain"
 
     emit("part-0000.jsonl", range(0, 50))
     emit("part-0001.jsonl", range(50, 80))

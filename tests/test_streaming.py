@@ -11,13 +11,15 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from pinterest_data_pipeline400_spark import streaming
 from pinterest_data_pipeline400_spark.generator import ensure_fixtures
 from pinterest_data_pipeline400_spark.operators.clean import clean_pin
 from pinterest_data_pipeline400_spark.streaming import (
     RAW_SCHEMAS,
-    clean_stream,
     decode_stream,
+    drain,
     read_envelope_stream,
+    run_pipeline_to_sink,
     write_stream_append,
 )
 from tests.conftest import TEST_SF_NAME
@@ -28,15 +30,8 @@ def fx_dir():
     return ensure_fixtures(TEST_SF_NAME)
 
 
-def _drain(spark, stream_dir, sink, ckpt, table="pin", timeout=300):
-    raw = read_envelope_stream(spark, stream_dir)
-    cleaned = clean_stream(decode_stream(raw, RAW_SCHEMAS[table]), table)
-    q = write_stream_append(cleaned, sink, ckpt)
-    try:
-        assert q.awaitTermination(timeout), "stream did not drain"
-    finally:
-        if q.isActive:
-            q.stop()
+def _drain(spark, stream_dir, sink, ckpt, table="pin"):
+    run_pipeline_to_sink(spark, stream_dir, table, sink, ckpt, timeout_sec=300)
     return spark.read.parquet(sink)
 
 
@@ -122,16 +117,8 @@ def test_stateful_counts_on_rocksdb_statestore(spark, tmp_path):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     try:
         stream = spark.readStream.schema("user_id long").parquet(in_dir)
-        q = (
-            stateful_running_counts(stream)
-            .writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(60)
+        counts = stateful_running_counts(stream)
+        drain(spark, "rocksdb_counts", lambda: write_stream_append(counts, sink, ckpt))
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -171,16 +158,8 @@ def test_stateful_counts_tws_needs_protobuf(spark):
         )
         try:
             stream = spark.readStream.schema("user_id long").parquet(in_dir)
-            q = (
-                stateful_running_counts_tws(stream)
-                .writeStream.format("parquet")
-                .option("checkpointLocation", ckpt)
-                .option("path", sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(60)
+            counts = stateful_running_counts_tws(stream)
+            drain(spark, "tws_counts", lambda: write_stream_append(counts, sink, ckpt))
         finally:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         out = {r.user_id: r.n_events_so_far for r in spark.read.parquet(sink).collect()}
@@ -205,16 +184,17 @@ def test_foreach_batch_sink_idempotent_partitions(spark, tmp_path):
         # overwrite-by-batch-id = idempotent re-run of the same batch
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
 
-    def drain():
+    def drain_once():
         stream = spark.readStream.schema("id long").parquet(in_dir)
-        q = write_stream_foreach_batch(stream, write_batch, ckpt)
-        assert q.awaitTermination(60)
+        drain(
+            spark, "foreach_batch", lambda: write_stream_foreach_batch(stream, write_batch, ckpt)
+        )
 
     pd.DataFrame({"id": range(10)}).to_parquet(os.path.join(in_dir, "p0.parquet"))
-    drain()
+    drain_once()
     batches_after_first = set(os.listdir(out))
     pd.DataFrame({"id": range(10, 15)}).to_parquet(os.path.join(in_dir, "p1.parquet"))
-    drain()  # restart on same checkpoint: only the new file arrives
+    drain_once()  # restart on same checkpoint: only the new file arrives
     all_rows = spark.read.parquet(os.path.join(out, "*")).count()
     assert all_rows == 15
     assert len(set(os.listdir(out)) - batches_after_first) == 1  # one new batch dir
@@ -235,16 +215,8 @@ def test_stateful_counts_string_key_col(spark, tmp_path):
         os.path.join(in_dir, "p0.parquet")
     )
     stream = spark.readStream.schema("country string").parquet(in_dir)
-    q = (
-        stateful_running_counts(stream, key_col="country")
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(60)
+    counts = stateful_running_counts(stream, key_col="country")
+    drain(spark, "string_key_counts", lambda: write_stream_append(counts, sink, ckpt))
     out = {r.country: r.n_events_so_far for r in spark.read.parquet(sink).collect()}
     assert out == {"US": 3, "DE": 2, "FR": 1}
 
@@ -367,3 +339,48 @@ def test_stream_neardup_dedup_matches_batch_and_recovers_state(spark):
     # jaccard 0.6-0.9; require that the band index caught most of them
     caught = sum(verdicts.get(d, "keep") == "dup" for d in straddle.doc_id)
     assert caught / len(straddle) >= 0.7, (caught, len(straddle))
+
+
+def test_drain_times_out_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """The drain contract's hang branch: a query that never terminates
+    (rate source on a processing-time trigger) makes ``drain`` raise
+    TimeoutError naming the entry after the bounded wait, and the query
+    is stopped, not left running in the shared session."""
+    monkeypatch.setattr(streaming, "STREAM_DRAIN_TIMEOUT_SEC", 1)
+    started = []
+
+    def start():
+        q = (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="1 second")
+            .start()
+        )
+        started.append(q)
+        return q
+
+    with pytest.raises(TimeoutError, match="never_drains"):
+        drain(spark, "never_drains", start)
+    assert not started[0].isActive
+
+
+def test_one_streaming_drain_path():
+    """Source scan pinning the single streaming path inside the engine
+    package: only ``streaming.drain`` awaits a query, only
+    ``streaming.py`` and ``sources/sinks.py`` build streaming sinks, and
+    no plan module sets the state partition count itself."""
+    import pathlib
+
+    pkg = pathlib.Path(streaming.__file__).parent
+
+    def files_with(token: str, root: pathlib.Path = pkg) -> list[str]:
+        return sorted(
+            p.relative_to(pkg).as_posix()
+            for p in root.rglob("*.py")
+            if token in p.read_text()
+        )
+
+    assert files_with("awaitTermination(") == ["streaming.py"]
+    assert files_with(".writeStream") == ["sources/sinks.py", "streaming.py"]
+    assert files_with("scoped_shuffle_partitions(", pkg / "plans") == []
